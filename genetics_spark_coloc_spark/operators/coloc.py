@@ -12,9 +12,11 @@ Input is the study_locus_overlap shape: one row per
 (leftStudyLocusId, rightStudyLocusId, tagVariantId) with a
 ``statistics`` struct of left_*/right_* tag stats.
 
-Scale notes: one shuffle — groupBy the locus pair (fine-grained key).
-The beta-ratio join is pair-keyed agg joined back on the same key, so
-AQE plans it after the same exchange.
+Scale notes: one aggregation per method — groupBy the locus pair
+(fine-grained key), with the beta-ratio sign average as one more
+aggregate of the same groupBy. ``find_overlaps`` output is already
+hash-partitioned on the pair key, so on it that groupBy plans no
+exchange at all.
 """
 
 from __future__ import annotations
@@ -29,7 +31,11 @@ from genetics_spark_coloc_spark.functions.reshape import (
     get_record_with_maximum_value,
 )
 
-PAIR_KEYS = ["leftStudyLocusId", "rightStudyLocusId", "rightStudyType", "chromosome"]
+from genetics_spark_coloc_spark.operators.overlaps import PAIR_KEYS
+
+# column order of both methods' results (the colocalisation table's
+# layout, which readers of written results rely on)
+RESULT_KEYS = ["leftStudyLocusId", "rightStudyLocusId", "chromosome", "rightStudyType"]
 
 # COLOC constants (reference: colocalisation.py:210-219)
 PSEUDOCOUNT = 1e-10
@@ -51,27 +57,13 @@ def tag_variant_source(statistics: Column) -> Column:
     )
 
 
-def calculate_beta_ratio(overlaps: DataFrame) -> DataFrame:
-    """Average sign of left/right beta ratio per pair
-    (reference: dataset/study_locus_overlap.py:55-83)."""
-    return (
-        overlaps.select(
-            "leftStudyLocusId",
-            "rightStudyLocusId",
-            "chromosome",
-            F.col("statistics.left_beta").alias("left_beta"),
-            F.col("statistics.right_beta").alias("right_beta"),
-        )
-        .filter(
-            F.col("left_beta").isNotNull()
-            & F.col("right_beta").isNotNull()
-            & (F.col("left_beta") != 0)
-            & (F.col("right_beta") != 0)
-        )
-        .withColumn("betaRatioSign", F.signum(F.col("left_beta") / F.col("right_beta")))
-        .groupBy("leftStudyLocusId", "rightStudyLocusId", "chromosome")
-        .agg(F.avg("betaRatioSign").alias("betaRatioSignAverage"))
-    )
+def beta_ratio_sign_average(statistics: Column) -> Column:
+    """Aggregate: average sign of the left/right beta ratio over the
+    tags where both betas are non-null and non-zero; NULL when no tag
+    qualifies (reference: dataset/study_locus_overlap.py:55-83)."""
+    lb, rb = statistics["left_beta"], statistics["right_beta"]
+    qualifies = lb.isNotNull() & rb.isNotNull() & (lb != 0) & (rb != 0)
+    return F.avg(F.when(qualifies, F.signum(lb / rb))).alias("betaRatioSignAverage")
 
 
 def ecaviar(overlaps: DataFrame) -> DataFrame:
@@ -94,7 +86,8 @@ def ecaviar(overlaps: DataFrame) -> DataFrame:
                 F.collect_list(
                     F.struct("tagVariantId", "tagVariantSource", "clpp")
                 )
-            ).alias("tags")
+            ).alias("tags"),
+            beta_ratio_sign_average(F.col("statistics")),
         )
         .withColumn(
             "numberColocalisingVariants",
@@ -112,12 +105,12 @@ def ecaviar(overlaps: DataFrame) -> DataFrame:
                 F.aggregate(F.col("_clpps"), F.lit(0.0), lambda acc, x: acc + x),
             ),
         )
-        .drop("tags", "_clpps")
-        .withColumn("colocalisationMethod", F.lit("eCAVIAR"))
-        .join(
-            calculate_beta_ratio(overlaps),
-            on=["leftStudyLocusId", "rightStudyLocusId", "chromosome"],
-            how="left",
+        .select(
+            *RESULT_KEYS,
+            "numberColocalisingVariants",
+            "clpp",
+            F.lit("eCAVIAR").alias("colocalisationMethod"),
+            "betaRatioSignAverage",
         )
     )
 
@@ -160,6 +153,7 @@ def coloc(
             F.coalesce(F.col("statistics.right_posteriorProbability"), F.lit(0.0)).alias(
                 "right_pp"
             ),
+            "statistics",
         )
         .withColumn("sum_log_bf", F.col("left_logBF") + F.col("right_logBF"))
         .groupBy(*PAIR_KEYS)
@@ -176,7 +170,8 @@ def coloc(
                         "right_pp",
                     )
                 )
-            ).alias("tags")
+            ).alias("tags"),
+            beta_ratio_sign_average(F.col("statistics")),
         )
         .withColumn(
             "numberColocalisingVariants",
@@ -232,19 +227,11 @@ def coloc(
         )
         .withColumn("posteriors", softmax(F.array(lh0, lh1, lh2, lh3, lh4)))
         .select(
-            *PAIR_KEYS,
+            *RESULT_KEYS,
             "numberColocalisingVariants",
-            F.col("posteriors")[0].alias("h0"),
-            F.col("posteriors")[1].alias("h1"),
-            F.col("posteriors")[2].alias("h2"),
-            F.col("posteriors")[3].alias("h3"),
-            F.col("posteriors")[4].alias("h4"),
-        )
-        .withColumn("colocalisationMethod", F.lit("COLOC"))
-        .join(
-            calculate_beta_ratio(overlaps),
-            on=["leftStudyLocusId", "rightStudyLocusId", "chromosome"],
-            how="left",
+            *[F.col("posteriors")[i].alias(f"h{i}") for i in range(5)],
+            F.lit("COLOC").alias("colocalisationMethod"),
+            "betaRatioSignAverage",
         )
     )
 

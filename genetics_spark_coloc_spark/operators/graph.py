@@ -262,6 +262,10 @@ def connected_components(
             if rid != newest and rid not in keep_ids:
                 fs.delete(p, True)
 
+    # an edge with a NULL endpoint connects nothing (the loop's joins
+    # drop it anyway); filtered once here so the driver-side fast path
+    # never compares None with an id
+    edges = edges.where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
     sym = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .unionByName(

@@ -68,9 +68,10 @@ def sumstat_qc_metrics(
     - ``mean_diff_pz`` / ``se_diff_pz``: mean and sd of
       −log10(p_reported) − (−log10(χ²-tail(Z²))) over Z² ≤ 100 —
       the reference computes the tail in a scipy row UDF
-      (:53-66); here it is the tail-accurate closed-form erfc, so
-      the whole panel is three shuffle-free partial aggregations on
-      one key.
+      (:53-66); here it is the tail-accurate closed-form erfc, and
+      the Z² ≤ 100 filter is a CASE inside the aggregate (NULL when
+      no row qualifies, sd NULL on one row), so the whole panel is
+      one aggregation — one shuffle — on studyId.
     """
     import math
 
@@ -88,7 +89,13 @@ def sumstat_qc_metrics(
         if exact_median
         else F.percentile_approx("_z2", 0.5)
     )
-    counts = base.groupBy("studyId").agg(
+    pz_diff = F.when(
+        F.col("_z2") <= 100,
+        -F.log10("pValueMantissa")
+        - F.col("pValueExponent")
+        - neg_log10_chi2_sf_1df(F.col("_z2")),
+    )
+    return base.groupBy("studyId").agg(
         F.count(F.lit(1)).alias("n_variants"),
         F.sum(
             (
@@ -98,22 +105,9 @@ def sumstat_qc_metrics(
         ).alias("n_variants_sig"),
         (median_z2 / F.lit(chi2_median_1df)).alias("gc_lambda"),
         F.mean("beta").alias("mean_beta"),
+        F.mean(pz_diff).alias("mean_diff_pz"),
+        F.stddev(pz_diff).alias("se_diff_pz"),
     )
-    pz = (
-        base.filter(F.col("_z2") <= 100)
-        .withColumn(
-            "_diff",
-            -F.log10("pValueMantissa")
-            - F.col("pValueExponent")
-            - neg_log10_chi2_sf_1df(F.col("_z2")),
-        )
-        .groupBy("studyId")
-        .agg(
-            F.mean("_diff").alias("mean_diff_pz"),
-            F.stddev("_diff").alias("se_diff_pz"),
-        )
-    )
-    return counts.join(pz, on="studyId", how="left")
 
 
 def sumstat_n_eff_check(

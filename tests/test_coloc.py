@@ -15,7 +15,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from genetics_spark_coloc_spark.operators.coloc import calculate_beta_ratio, coloc, ecaviar
+from genetics_spark_coloc_spark.operators.coloc import coloc, ecaviar
 
 OVERLAP_SCHEMA = StructType(
     [
@@ -168,5 +168,7 @@ def test_beta_ratio_mixed_signs(spark):
         ],
         schema=OVERLAP_SCHEMA,
     )
-    result = calculate_beta_ratio(df).collect()
-    assert result[0]["betaRatioSignAverage"] == pytest.approx(0.0)
+    for method in (coloc, ecaviar):
+        result = method(df).collect()
+        assert len(result) == 1
+        assert result[0]["betaRatioSignAverage"] == pytest.approx(0.0)

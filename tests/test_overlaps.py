@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -84,6 +86,138 @@ def test_find_overlaps_eqtl_never_left(spark):
         schema=LOCUS_SCHEMA,
     )
     assert find_overlaps(df).count() == 0
+
+
+def _tag(variant_id, pp, beta):
+    return {
+        "variantId": variant_id,
+        "posteriorProbability": pp,
+        "logBF": 1.0,
+        "beta": beta,
+        "pValueMantissa": 1.0,
+        "pValueExponent": -8,
+    }
+
+
+def _edge_loci(region_l3="1:1-1000"):
+    """L1/gwas repeats v2 and carries a NULL id; L2/eqtl carries a NULL
+    id; L3/gwas shares v2 (beta 0) with both and v3 with L2; L4 and L5
+    have an empty and a NULL credible set."""
+    l1 = [_tag("v1", 0.1, 0.1), _tag("v2", 0.2, -0.2), _tag("v2", 0.6, 0.3), _tag(None, 0.1, 0.5)]
+    l2 = [_tag("v2", 0.9, 0.4), _tag("v3", 0.05, 0.2), _tag(None, 0.05, 0.1)]
+    l3 = [_tag("v2", 0.7, 0.0), _tag("v3", 0.2, -0.1), _tag("v4", 0.1, 0.3)]
+    return [
+        ("L1", "S1", "gwas", "1", "1:1-1000", l1),
+        ("L2", "S2", "eqtl", "1", "1:1-1000", l2),
+        ("L3", "S1", "gwas", "1", region_l3, l3),
+        ("L4", "S3", "gwas", "1", "1:1-1000", []),
+        ("L5", "S4", "gwas", "1", "1:1-1000", None),
+    ]
+
+
+def _overlap_rows(df):
+    return Counter(
+        (
+            r["leftStudyLocusId"],
+            r["rightStudyLocusId"],
+            r["tagVariantId"] or "",
+            r["statistics"]["left_posteriorProbability"],
+            r["statistics"]["right_posteriorProbability"],
+        )
+        for r in df.collect()
+    )
+
+
+def test_find_overlaps_aligns_repeated_and_null_tag_ids(spark):
+    """A repeated id pairs as a cross product (two v2 rows); NULL ids
+    never match and come out once on their own side."""
+    df = spark.createDataFrame(_edge_loci()[:2], schema=LOCUS_SCHEMA)
+    assert _overlap_rows(find_overlaps(df)) == Counter([
+        ("L1", "L2", "", None, 0.05),
+        ("L1", "L2", "", 0.1, None),
+        ("L1", "L2", "v1", 0.1, None),
+        ("L1", "L2", "v2", 0.2, 0.9),
+        ("L1", "L2", "v2", 0.6, 0.9),
+        ("L1", "L2", "v3", None, 0.05),
+    ])
+
+
+def test_find_overlaps_and_beta_ratio_match_the_duckdb_oracle(spark):
+    """find_overlaps rows and the beta-ratio sign average of eCAVIAR and
+    COLOC equal the registry's DuckDB spellings (``SQL_FIND_OVERLAPS``,
+    the ``beta_ratio`` CTE of ``SQL_ECAVIAR``) on the edge-case loci."""
+    import duckdb
+    import pandas as pd
+
+    from genetics_spark_coloc_spark import queries
+    from genetics_spark_coloc_spark.operators.coloc import coloc, ecaviar
+
+    loci = _edge_loci()
+    tags = pd.DataFrame(
+        [
+            {
+                "studyLocusId": slid,
+                "studyType": stype,
+                "chromosome": chrom,
+                "tagVariantId": t["variantId"],
+                "posteriorProbability": t["posteriorProbability"],
+                "logBF": t["logBF"],
+                "beta": t["beta"],
+            }
+            for slid, _, stype, chrom, _, locus in loci
+            for t in locus or []
+        ]
+    )
+    con = duckdb.connect()
+    con.register("fixture_tags", tags)
+
+    def oracle(sql):
+        bound = sql.replace(queries.TAGS_SQL.strip(), "tags AS (SELECT * FROM fixture_tags)")
+        return con.execute(bound).fetchdf()
+
+    overlaps = find_overlaps(spark.createDataFrame(loci, schema=LOCUS_SCHEMA))
+    want = oracle(queries.SQL_FIND_OVERLAPS)
+    assert _overlap_rows(overlaps) == Counter(
+        (r.leftStudyLocusId, r.rightStudyLocusId, r.tagVariantId or "",
+         None if pd.isna(r.left_pp) else r.left_pp,
+         None if pd.isna(r.right_pp) else r.right_pp)
+        for r in want.itertuples()
+    )
+    assert {(r.leftStudyLocusId, r.rightStudyLocusId) for r in want.itertuples()} == {
+        ("L1", "L2"), ("L3", "L1"), ("L3", "L2")
+    }
+
+    want_ratio = {
+        (r.leftStudyLocusId, r.rightStudyLocusId): (
+            None if pd.isna(r.betaRatioSignAverage) else r.betaRatioSignAverage
+        )
+        for r in oracle(queries.SQL_ECAVIAR).itertuples()
+    }
+    # L3's shared v2 has beta 0, so (L3, L1) has no qualifying tag
+    assert want_ratio == {("L1", "L2"): 0.0, ("L3", "L1"): None, ("L3", "L2"): -1.0}
+    for method in (ecaviar, coloc):
+        got = {
+            (r["leftStudyLocusId"], r["rightStudyLocusId"]): r["betaRatioSignAverage"]
+            for r in method(overlaps).collect()
+        }
+        # COLOC keeps every pair here: each shares a tag with pp > 0.5 on both sides
+        assert got == want_ratio, method.__name__
+
+
+def test_find_overlaps_intra_study(spark):
+    """Intra-study pairs: same study, different region, id-ordered;
+    L1/L3 share v2 (repeated in L1) and L3 sits in another region."""
+    df = spark.createDataFrame(_edge_loci(region_l3="1:2000-3000"), schema=LOCUS_SCHEMA)
+    assert _overlap_rows(find_overlaps(df, intra_study_overlap=True)) == Counter([
+        ("L3", "L1", "", None, 0.1),
+        ("L3", "L1", "v1", None, 0.1),
+        ("L3", "L1", "v2", 0.7, 0.2),
+        ("L3", "L1", "v2", 0.7, 0.6),
+        ("L3", "L1", "v3", 0.2, None),
+        ("L3", "L1", "v4", 0.1, None),
+    ])
+    same_region = spark.createDataFrame(_edge_loci(), schema=LOCUS_SCHEMA)
+    assert find_overlaps(same_region, intra_study_overlap=True).count() == 0
 
 
 def test_annotate_credible_sets(spark):

@@ -89,17 +89,34 @@ def test_binned_range_join_is_not_nested_loop(spark):
 
 
 def test_overlaps_plan_shuffle_budget(spark):
-    """find_overlaps should need a bounded number of exchanges (self
-    join + aligns + distinct); catch accidental shuffle explosions.
-
-    The static plan duplicates the persisted tag-derivation exchanges
-    once per consuming branch (3-4×) even though execution reuses the
-    cached partitions, and the count varies with whether the cache is
-    materialized when the plan prints. 24 is the regression tripwire
-    for a genuine shuffle explosion (a naive rewrite lands ~2× that).
-    """
+    """find_overlaps plans a bounded number of exchanges; catch
+    accidental shuffle explosions. The plan derives the registry's tag
+    rows from ``events`` (window + aggregations), folds them into loci,
+    self-joins the tags into distinct pairs, joins the pairs to both
+    sides' credible-set rows (broadcast at this size) and repartitions
+    the pair rows on the pair key. The alignment itself is a per-row map
+    merge and plans no exchange; a tag-level alignment (two joins plus
+    a full-outer join) would push the count to about 22."""
     df = QUERIES["find_overlaps"](spark, SF_DIR)
-    assert shuffle_count(df) <= 24, f"too many exchanges: {shuffle_count(df)}"
+    assert shuffle_count(df) <= 12, f"too many exchanges: {shuffle_count(df)}"
+
+
+def test_coloc_aggregation_plans_no_exchange_of_its_own(spark):
+    """find_overlaps leaves its rows hash-partitioned on the pair key,
+    which is eCAVIAR's and COLOC's grouping key, and the beta-ratio
+    sign average rides the same aggregation: neither method may plan
+    an exchange beyond those of its overlaps."""
+    n = shuffle_count(QUERIES["find_overlaps"](spark, SF_DIR))
+    for name in ("ecaviar", "coloc"):
+        got = shuffle_count(QUERIES[name](spark, SF_DIR))
+        assert got <= n, f"{name}: {got} exchanges vs find_overlaps' {n}"
+
+
+def test_find_overlaps_caches_nothing(spark):
+    """find_overlaps persists no intermediate: a cache nobody unpersists
+    leaks into every caller's session."""
+    plan = physical_plan(QUERIES["find_overlaps"](spark, SF_DIR))
+    assert "InMemoryRelation" not in plan, plan
 
 
 def test_interval_and_ivf_joins_stay_hash_shaped(spark):

@@ -165,3 +165,27 @@ def test_fast_path_duplicate_and_self_edges(spark):
                              dedup_edges=False)
     )
     assert got == {0: 0, 1: 1, 2: 1, 3: 3}
+
+
+def test_fast_path_equals_loop_with_null_endpoints(spark):
+    """Edges with a NULL endpoint connect nothing: the driver-side
+    union-find must not crash on them and must label exactly as the
+    distributed loop does."""
+    verts = spark.createDataFrame(
+        [("a",), ("b",), ("c",), ("d",)], "id string"
+    )
+    edf = spark.createDataFrame(
+        [("b", "a"), ("c", None), (None, "d"), (None, None)],
+        "leftId string, rightId string",
+    )
+    stats: dict = {}
+    fast = _labels(
+        connected_components(verts, edf, until_converged=True, stats_out=stats)
+    )
+    assert "small_graph_fast_path_edges" in stats, stats
+    slow = _labels(
+        connected_components(
+            verts, edf, until_converged=True, small_graph_edges=0
+        )
+    )
+    assert fast == slow == {"a": "a", "b": "a", "c": "c", "d": "d"}

@@ -1262,8 +1262,8 @@ def genetics_skew_probes(sizes: "tuple[int, ...]" = (10_000_000, 40_000_000)) ->
     """Round-11 probe (VERDICT r10 #5): the genetics self-join family
     under PLANTED chromosome skew — one chromosome holds 30% of all
     tags/sumstat rows (the human chr1/chr2 shape, exaggerated) at
-    10-40M rows. Measures (a) overlapping_peaks + align_overlapping_
-    tags (the credible-set self theta-join: equi keys are (chromosome,
+    10-40M rows. Measures (a) find_overlaps on one-tag loci (the
+    credible-set self theta-join: equi keys are (chromosome,
     tagVariantId), so hash partitioning spreads the hot chromosome
     across its variants — skew should NOT concentrate) and (b)
     annotate_locus_statistics (broadcast range join: the sumstats side
@@ -1282,10 +1282,7 @@ def genetics_skew_probes(sizes: "tuple[int, ...]" = (10_000_000, 40_000_000)) ->
     from genetics_spark_coloc_spark.operators.locus_statistics import (
         annotate_locus_statistics,
     )
-    from genetics_spark_coloc_spark.operators.overlaps import (
-        align_overlapping_tags,
-        overlapping_peaks,
-    )
+    from genetics_spark_coloc_spark.operators.overlaps import find_overlaps
 
     for n in sizes:
         # --- planted-skew tag table: chr '1' holds 30% of the rows;
@@ -1316,11 +1313,27 @@ def genetics_skew_probes(sizes: "tuple[int, ...]" = (10_000_000, 40_000_000)) ->
         ).drop("_id")
         tags = tags.localCheckpoint(eager=True)
         hot_frac = tags.filter(F.col("chromosome") == "1").count() / n
+        # one locus per tag row: the pair join sees the same tags
+        loci = tags.select(
+            "studyLocusId",
+            "studyId",
+            "studyType",
+            "chromosome",
+            "region",
+            F.array(
+                F.struct(
+                    F.col("tagVariantId").alias("variantId"),
+                    "logBF",
+                    "posteriorProbability",
+                    "beta",
+                    "pValueMantissa",
+                    "pValueExponent",
+                )
+            ).alias("locus"),
+        )
         start = time.perf_counter()
-        peaks = overlapping_peaks(tags)
-        n_pairs = align_overlapping_tags(tags, peaks).count()
+        n_pairs = find_overlaps(loci).count()
         overlap_sec = round(time.perf_counter() - start, 2)
-        peaks.unpersist()
         print(
             json.dumps(
                 {
